@@ -192,7 +192,6 @@ class DedupConfig:
 
     # ---- skew handling ----
     band_cap: int = 200         # max posting-list size per (band, hash)
-    salt_partitions: int = 0    # 0 = let AQE handle it
 
     # ---- misc ----
     max_decode_seconds: float = 8.0   # featurize at most this much audio

@@ -209,13 +209,7 @@ def containment_edges(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     # drops from sum-of-C(bucket,2) — measured 52.3M pairs at 640k
     # clips, growing ~n^2 — to sum-of-df(rarest), i.e. near-linear.
     # Ties on df break on the key value for determinism.
-    pat_min = (
-        pok.groupBy("clip_id")
-        .agg(F.min(F.struct("n", "key")).alias("mk"))
-        .select(
-            F.col("clip_id").alias("pat_id"), F.col("mk.key").alias("key")
-        )
-    )
+    pat_min = rarest_fingerprint(pok).withColumnRenamed("clip_id", "pat_id")
     t = signatures.select("clip_id", "t_norm", "t_len")
     pat = pat_min.join(
         t.select(
@@ -245,6 +239,20 @@ def containment_edges(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
         F.greatest("pat_id", "cont_id").alias("b"),
         F.lit("containment").alias("kind"),
         "sim",
+    )
+
+
+def rarest_fingerprint(posting: DataFrame) -> DataFrame:
+    """(key, clip_id, n) posting rows carrying each key's count ->
+    (clip_id, key): every clip's rarest fingerprint among the rows it
+    is given, ties broken on the key value.  Callers decide which keys
+    survive (and whose counts `n` are) by what they join in first; by
+    winnowing self-consistency (containment_edges) the one key is a
+    complete containment probe for the clip as a pattern."""
+    return (
+        posting.groupBy("clip_id")
+        .agg(F.min(F.struct("n", "key")).alias("mk"))
+        .select("clip_id", F.col("mk.key").alias("key"))
     )
 
 

@@ -67,6 +67,18 @@ def pcm_exact_edges(audio_reps: DataFrame) -> DataFrame:
     )
 
 
+def trim_reps(audio_reps: DataFrame) -> DataFrame:
+    """(pcm_sha, clip_id, trim_sha): one representative (min clip_id)
+    per decoded-PCM hash among the reps with a trimmed hash — the rows
+    the trim_exact tier stars over and probes a store with."""
+    return (
+        audio_reps.filter(F.col("trim_sha") != "")
+        .groupBy("pcm_sha")
+        .agg(F.min_by(F.struct("clip_id", "trim_sha"), "clip_id").alias("r"))
+        .select("pcm_sha", "r.*")
+    )
+
+
 def trim_exact_edges(audio_reps: DataFrame) -> DataFrame:
     """Silence-padding-invariant exact tier (opt-in, cfg.trim_eps > 0):
     star edges over the canonical hash of the silence-TRIMMED decoded
@@ -82,15 +94,10 @@ def trim_exact_edges(audio_reps: DataFrame) -> DataFrame:
     the tier emits nothing on a pad-free corpus (every trim group has
     one rep).  Edge volume stays linear; one extra bounded groupBy on
     the rep relation."""
-    preps = (
-        audio_reps.filter(F.col("trim_sha") != "")
-        .groupBy("pcm_sha")
-        .agg(F.min_by(F.struct("clip_id", "trim_sha"), "clip_id").alias("r"))
-        .select("r.*")
-    )
     w = Window.partitionBy("trim_sha")
     return (
-        preps.withColumn("a", F.min("clip_id").over(w))
+        trim_reps(audio_reps)
+        .withColumn("a", F.min("clip_id").over(w))
         .filter(F.col("clip_id") != F.col("a"))
         .select(
             F.col("a"),

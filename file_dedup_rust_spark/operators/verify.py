@@ -12,7 +12,7 @@ verify stage is a pair-table join plus vectorized expressions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from file_dedup_rust_spark.config import DedupConfig
@@ -29,6 +29,21 @@ def _attach(pairs: DataFrame, signatures: DataFrame, cols: list[str]) -> DataFra
     return pairs.join(sig_a, "a").join(sig_b, "b")
 
 
+def minhash_sim(a, b, cfg: DedupConfig) -> Column:
+    """Fraction of agreeing lanes between two MinHash signature columns
+    (array<long>) — the Jaccard estimator every MinHash verify uses,
+    bit-for-bit the numpy oracle's signature_jaccard."""
+    agree = F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda v: v))
+    return agree / F.lit(float(cfg.num_perm))
+
+
+def simhash_sim(a, b, cfg: DedupConfig) -> tuple[Column, Column]:
+    """(Hamming distance, similarity 1 - d/bits) between two SimHash
+    columns; callers filter on the distance (d <= cfg.hamming_max)."""
+    d = F.bit_count(a.bitwiseXOR(b))
+    return d, F.lit(1.0) - d / F.lit(float(cfg.simhash_bits))
+
+
 def verify_minhash(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """pairs(a,b) -> (a, b, kind='transcript', sim) with sim =
     fraction of agreeing MinHash lanes, filtered at jaccard_threshold.
@@ -36,13 +51,7 @@ def verify_minhash(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig) ->
     The estimator (lane agreement) matches the numpy oracle's
     signature_jaccard bit-for-bit."""
     joined = _attach(pairs, signatures, ["minhash"])
-    agree = F.size(
-        F.filter(
-            F.zip_with("minhash_a", "minhash_b", lambda x, y: x == y),
-            lambda v: v,
-        )
-    )
-    sim = agree / F.lit(float(cfg.num_perm))
+    sim = minhash_sim(F.col("minhash_a"), F.col("minhash_b"), cfg)
     return (
         joined
         # empty-transcript signatures are all -1 sentinels; never match them
@@ -58,10 +67,7 @@ def verify_simhash(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig) ->
     """pairs(a,b) -> (a, b, kind='audio', sim) with sim = 1 - d/bits,
     filtered at hamming_max (<=12/64 -> sim >= 0.8125 >= reference 0.8)."""
     joined = _attach(pairs, signatures, ["simhash", "decode_ok"])
-    d = F.bit_count(
-        F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
-    )
-    sim = F.lit(1.0) - d / F.lit(float(cfg.simhash_bits))
+    d, sim = simhash_sim(F.col("simhash_a"), F.col("simhash_b"), cfg)
     return (
         joined.filter(F.col("decode_ok_a") & F.col("decode_ok_b"))
         .withColumn("hamming", d)
@@ -109,8 +115,7 @@ def simhash_edges_in_bucket(
         ).alias("xs")
     )
     x = F.col("x")
-    d = F.bit_count(F.col("x.simhash").bitwiseXOR(F.col("y.simhash")))
-    sim = F.lit(1.0) - d / F.lit(float(cfg.simhash_bits))
+    d, sim = simhash_sim(F.col("x.simhash"), F.col("y.simhash"), cfg)
     return (
         grouped.select(F.explode("xs").alias("x"), "xs")
         .select(

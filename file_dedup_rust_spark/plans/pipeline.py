@@ -144,11 +144,11 @@ def build_edges(
     attach, containment/dropped-bucket accounting), so they are
     persisted — without it every union branch would recompute the
     dedup-to-representatives shuffle.  Callers that also need the reps
-    AFTER the edge derivation (run_pipeline's dropped_buckets
-    accounting re-counts the same posting lists) pass their own
-    persisted `treps`/`areps` and own the cache lifecycle — measured
-    at 2.56 M clips the rep recompute was most of a 59.6 s manifest
-    stage."""
+    AFTER the edge derivation (rep_dropped_buckets re-counts the same
+    posting lists; the streaming micro-batch also probes its stores
+    with them) pass their own persisted `treps`/`areps` and own the
+    cache lifecycle — measured at 2.56 M clips the rep recompute was
+    most of a 59.6 s manifest stage."""
     sigs = signatures
     e_exact = exact_dup_edges(sigs)
     e_ttext = exact_transcript_edges(sigs)
@@ -186,6 +186,27 @@ def build_edges(
     if cfg.trim_eps:
         edges = edges.unionByName(trim_exact_edges(areps))
     return edges
+
+
+def rep_dropped_buckets(
+    treps: DataFrame, areps: DataFrame, cap: int
+) -> DataFrame:
+    """(key, n, path) for every posting bucket build_edges drops at
+    `cap` — path minhash / simhash over the rep tables' band keys,
+    winnow over their containment fingerprints — so no cap truncates
+    silently.  Takes the same rep tables build_edges was given."""
+    return (
+        C.dropped_buckets(C.explode_keys(treps, "mh_bands"), cap)
+        .withColumn("path", F.lit("minhash"))
+        .unionByName(
+            C.dropped_buckets(C.explode_keys(areps, "sim_keys"), cap)
+            .withColumn("path", F.lit("simhash"))
+        )
+        .unionByName(
+            C.dropped_buckets(C.explode_keys(treps, "fps"), cap)
+            .withColumn("path", F.lit("winnow"))
+        )
+    )
 
 
 # Tier ladder in increasing verify cost.  The two exact tiers are
@@ -439,23 +460,10 @@ def run_pipeline(
     # dropped-bucket accounting (manifest metrics; SURVEY.md 7.3.2) —
     # reuses the persisted rep tables from the edges stage above
     if not (resume and io.is_committed("dropped_buckets", fp)):
-        dropped = (
-            C.dropped_buckets(C.explode_keys(treps, "mh_bands"), cfg.band_cap)
-            .withColumn("path", F.lit("minhash"))
-            .unionByName(
-                C.dropped_buckets(
-                    C.explode_keys(areps, "sim_keys"), cfg.band_cap
-                ).withColumn("path", F.lit("simhash"))
-            )
-            .unionByName(
-                C.dropped_buckets(
-                    C.explode_keys(treps, "fps"), cfg.band_cap
-                ).withColumn("path", F.lit("winnow"))
-            )
-        )
         _, r = io.stage(
-            "dropped_buckets", fp, lambda: dropped, parents=["signatures"],
-            resume=resume,
+            "dropped_buckets", fp,
+            lambda: rep_dropped_buckets(treps, areps, cfg.band_cap),
+            parents=["signatures"], resume=resume,
         )
         stages.append(r)
     treps.unpersist()

@@ -11,20 +11,29 @@ accumulated signature store.  `trigger(availableNow=True)` gives the
 drain-the-queue batch semantics; a continuous trigger gives the
 always-on worker semantics — same code.
 
-Two stateful surfaces are provided:
+Dedup surfaces (foreachBatch over idempotent, compacted stores unless
+noted):
 
-* `incremental_exact_dedup` — foreachBatch: join each micro-batch's
-  sha256 against the accumulated corpus store (exact-dup probe J1),
-  emit match rows, append the batch to the store.  The store is plain
-  parquet here; on a cluster it would be the Iceberg signatures table
-  (MERGE INTO), same flow.
+* `incremental_exact_dedup` — join each micro-batch's sha256 against
+  the accumulated corpus store (exact-dup probe J1), emit match rows,
+  append the batch to the store.  The store is plain parquet here; on
+  a cluster it would be the Iceberg signatures table (MERGE INTO),
+  same flow.
+* `incremental_near_dedup` — every default edge tier: within a
+  micro-batch the rows are the batch engine's own `build_edges` on
+  the micro-batch; against the stores, hot-key-capped probes of each
+  tier's index.
+* `incremental_ivf_neardup` — the embedding modality through the
+  persistent IVF cell store; `streaming_speed_probe` — the opt-in
+  speed-perturbation tier at ingest.
 * `streaming_cluster_assign` — applyInPandasWithState: running
   cluster assignment keyed by sha256; state = first clip_id seen for
   the hash (the reference's create-or-join cluster step,
   deduplication_service.rs:374-433, made deterministic).
 
-Watermarked event-time aggregation (late data) is in
-`windowed_ingest_stats`.
+Ingest-time side outputs — decontamination hits, HLL / Count-Min /
+Bloom sketch deltas — and watermarked event-time aggregation (late
+data, `windowed_ingest_stats`) complete the module.
 """
 
 from __future__ import annotations
@@ -36,9 +45,18 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from file_dedup_rust_spark.config import DedupConfig
 from file_dedup_rust_spark.datagen import CLIP_SCHEMA
 from file_dedup_rust_spark.functions.udfs import compute_signatures
+from file_dedup_rust_spark.operators import candidates as C
+from file_dedup_rust_spark.operators import verify as V
 from file_dedup_rust_spark.operators.containment import (
-    containment_edges,
+    rarest_fingerprint,
     verify_oriented_pairs,
+)
+from file_dedup_rust_spark.operators.exact import trim_reps
+from file_dedup_rust_spark.plans.pipeline import (
+    audio_reps,
+    build_edges,
+    rep_dropped_buckets,
+    text_reps,
 )
 
 # ---------------------------------------------------------------------------
@@ -404,23 +422,34 @@ def incremental_near_dedup(
         shares the designated one (operators/containment.py min-df
         note) — the store never needs re-keying as df drifts.
 
-    Each micro-batch probes all SIX batch edge families against the
-    stores plus itself — exact sha256 (J1), codec-invariant exact
-    audio (pcm_exact: a container-flipped re-upload matches at ingest,
-    probed over per-sha256 batch reps so it is free on flip-free
-    batches — round 5, ADVICE r4), exact transcript (t_norm),
-    MinHash-verified transcript near-dups, SimHash audio near-dups
-    (J2), and substring containment (both arrival orders: the batch
-    pattern's rarest surviving store-fp probes ``fp_posting``, and
-    ``fp_pat``'s designated keys probe the batch's fingerprints) —
-    full modality parity with the batch pipeline's default tiers
-    (plans/pipeline.py build_edges).  When ``cfg.trim_eps`` is set the
-    opt-in silence-pad-invariant tier probes at ingest too
-    (trim_exact, mirroring operators.exact.trim_exact_edges): per-
-    pcm_sha batch reps star within the batch and join the store on
-    trim_sha where the decoded-PCM hash differs, so a padded re-upload
-    matches at ingest; with the tier off trim_sha is empty and both
-    probes are no-ops.  With ``audio_containment=True``
+    Within a micro-batch (``match_scope='batch'``) the match rows ARE
+    the batch engine's edges: ``plans.pipeline.build_edges`` runs on
+    the micro-batch (one representative per sha256 / normalized
+    transcript, capped LSH buckets, verification, containment), each
+    edge (a, b, kind, sim) written as ``clip_id=b``,
+    ``matched_clip_id=a``, ``match_kind=kind`` — so ``clip_id`` is the
+    larger id of the pair, and the batch's star and rep-contraction
+    shapes carry over (exact copies attach to their rep, near-dup
+    rows join reps).  The buckets that run drops at ``cfg.band_cap``
+    are recorded as (key, n, path) rows in ``{store_dir}/batch_dropped``
+    — plans.pipeline.rep_dropped_buckets, the rows run_pipeline's
+    dropped_buckets stage records.
+
+    Against the stores (``match_scope='corpus'``) each micro-batch
+    probes all SIX batch edge families — exact sha256 (J1),
+    codec-invariant exact audio (pcm_exact over the per-sha256 batch
+    reps, against stored clips whose byte hash differs, so a
+    container-flipped re-upload matches at ingest), exact transcript
+    (t_norm), MinHash-verified transcript near-dups, SimHash audio
+    near-dups (J2), and substring containment (both arrival orders:
+    the batch pattern's rarest surviving store-fp probes
+    ``fp_posting``, and ``fp_pat``'s designated keys probe the batch's
+    fingerprints).  When ``cfg.trim_eps`` is set the opt-in
+    silence-pad-invariant tier probes too: the per-pcm_sha reps
+    (operators.exact.trim_reps) join the store on trim_sha where the
+    decoded-PCM hash differs, so a padded re-upload matches at ingest;
+    with the tier off trim_sha is empty and the probe is a no-op.
+    With ``audio_containment=True``
     the opt-in sub-clip tier probes at ingest too (seventh family,
     round 5): the frame subfingerprints ride the SAME signature decode
     pass (with_frames — no second bytes scan, exactly the fused batch
@@ -435,7 +464,8 @@ def incremental_near_dedup(
     Emits (clip_id, matched_clip_id, match_kind in {exact, pcm_exact,
     trim_exact, transcript, audio, containment, audio_containment}, sim,
     match_scope in {batch, corpus}); ``clip_id`` is always the
-    arriving clip on cross-corpus rows.
+    arriving clip on cross-corpus rows and the larger id on
+    ``build_edges`` rows.
 
     Hot-key defense (VERDICT r3): every probe against an ACCUMULATED
     posting store is capped the same way the batch path caps its
@@ -463,23 +493,19 @@ def incremental_near_dedup(
         "n_samples", "sr_hz", "dur_ms",
         *(("frame_fps",) if audio_containment else ()),
     )
-    d_max = cfg.hamming_max
-    bits = float(cfg.simhash_bits)
-    n_perm = float(cfg.num_perm)
-    jaccard_t = cfg.jaccard_threshold
 
     def hamming_matches(probe, index):
-        d = F.bit_count(F.col("p.simhash").bitwiseXOR(F.col("i.simhash")))
+        d, sim = V.simhash_sim(F.col("p.simhash"), F.col("i.simhash"), cfg)
         return (
             probe.alias("p")
             .join(index.alias("i"), "key")
             .filter(F.col("p.clip_id") != F.col("i.clip_id"))
-            .filter(d <= d_max)
+            .filter(d <= cfg.hamming_max)
             .select(
                 F.col("p.clip_id").alias("clip_id"),
                 F.col("i.clip_id").alias("matched_clip_id"),
                 F.lit("audio").alias("match_kind"),
-                (F.lit(1.0) - d / F.lit(bits)).alias("sim"),
+                sim.alias("sim"),
             )
             .distinct()
         )
@@ -496,45 +522,27 @@ def incremental_near_dedup(
             F.col("clip_id").alias("matched_clip_id"),
             F.col("minhash").alias("mh_b"),
         )
-        agree = F.size(
-            F.filter(F.zip_with("mh_a", "mh_b", lambda x, y: x == y),
-                     lambda v: v)
-        )
         return (
             cand.join(pa, "clip_id").join(pb, "matched_clip_id")
             # empty-transcript signatures are all -1 sentinels
             .filter(
                 (F.element_at("mh_a", 1) >= 0) & (F.element_at("mh_b", 1) >= 0)
             )
-            .withColumn("sim", agree / F.lit(n_perm))
-            .filter(F.col("sim") >= F.lit(jaccard_t))
+            .withColumn("sim", V.minhash_sim(F.col("mh_a"), F.col("mh_b"), cfg))
+            .filter(F.col("sim") >= F.lit(cfg.jaccard_threshold))
             .select(
                 "clip_id", "matched_clip_id",
                 F.lit("transcript").alias("match_kind"), "sim",
             )
         )
 
-    def star_intra(rows: DataFrame, group_col: str, kind: str) -> DataFrame:
-        """Within-batch exact dups: star to the batch-min clip_id per
-        identical group value."""
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(group_col)
-        return (
-            rows.withColumn("rep", F.min("clip_id").over(w))
-            .filter(F.col("clip_id") != F.col("rep"))
-            .select(
-                "clip_id",
-                F.col("rep").alias("matched_clip_id"),
-                F.lit(kind).alias("match_kind"),
-                F.lit(1.0).alias("sim"),
-                F.lit("batch").alias("match_scope"),
-            )
-        )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.persist()
-        hots: list[DataFrame] = []
+        # the rep tables feed build_edges, the batch_dropped accounting
+        # and the pcm/trim store probes
+        treps = text_reps(b).persist()
+        areps = audio_reps(b).persist()
+        cached: list[DataFrame] = [treps, areps]  # unpersisted at the end
         try:
             spark_l = b.sparkSession
             posting_b = b.filter("decode_ok").select(
@@ -551,56 +559,32 @@ def incremental_near_dedup(
             def capped(index: DataFrame, name: str) -> DataFrame:
                 """Hot-key defense on an accumulated posting store:
                 exclude over-cap keys, record them in the manifest."""
-                counts = index.groupBy("key").agg(F.count("*").alias("n"))
-                hot = counts.filter(F.col("n") > cfg.band_cap).persist()
-                hots.append(hot)
+                _, hot = C.bucket_stats(index, cfg.band_cap)
+                hot = hot.persist()
+                cached.append(hot)
                 store_write(hot, f"{store_dir}/{name}_dropped", batch_id)
                 return index.join(hot.select("key"), "key", "left_anti")
 
-            # ---- within-batch probes ----
-            exact_intra = star_intra(b, "sha256", "exact")
-            ttext_intra = star_intra(text_b, "t_norm", "transcript")
-            # codec-invariant exact audio (pcm_exact, round 5 — ADVICE
-            # r4: a container-flipped re-upload must match at ingest,
-            # not at the next batch run).  Mirrors the batch tier
-            # (operators.exact.pcm_exact_edges): the probe runs over
-            # per-sha256 batch REPS, so a flip-free batch contributes
-            # one rep per pcm group and zero edges — the tier stays
-            # free when nothing flipped.
-            from pyspark.sql import Window as _W
-
-            areps_b = (
-                b.filter("decode_ok")
-                .filter(F.col("pcm_sha") != "")
-                .withColumn(
-                    "r", F.min("clip_id").over(_W.partitionBy("sha256"))
-                )
-                .filter(F.col("clip_id") == F.col("r"))
-                .select("clip_id", "sha256", "pcm_sha", "trim_sha")
+            # ---- within the micro-batch: the batch engine's edges ----
+            matches = build_edges(b, cfg, treps=treps, areps=areps).select(
+                F.col("b").alias("clip_id"),
+                F.col("a").alias("matched_clip_id"),
+                F.col("kind").alias("match_kind"),
+                "sim",
+                F.lit("batch").alias("match_scope"),
             )
-            pcm_intra = star_intra(areps_b, "pcm_sha", "pcm_exact")
-            # silence-pad-invariant exact audio (trim_exact): mirrors
-            # the batch tier (operators.exact.trim_exact_edges) —
-            # probe over per-pcm_sha batch reps so a pad-free batch
-            # emits nothing.  trim_sha is only non-empty when
-            # cfg.trim_eps is set, so the probe (and its store join)
-            # is free with the tier off.
-            trim_reps_b = (
-                areps_b.filter(F.col("trim_sha") != "")
-                .withColumn(
-                    "r2", F.min("clip_id").over(_W.partitionBy("pcm_sha"))
-                )
-                .filter(F.col("clip_id") == F.col("r2"))
-                .drop("r2")
+            store_write(
+                rep_dropped_buckets(treps, areps, cfg.band_cap),
+                f"{store_dir}/batch_dropped", batch_id,
             )
-            trim_intra = star_intra(trim_reps_b, "trim_sha", "trim_exact")
             # ingest-time transcript-conflict probe (the streaming
             # surface of audio_quality.transcript_conflicts): same
             # decoded audio (codec-invariant pcm_sha), DIFFERENT
             # normalized transcript.  Within the batch each clip is
             # checked against its pcm group's (min clip_id, t_norm)
-            # rep — star-shaped like every other intra probe, a
-            # conflict-free batch emits nothing.
+            # rep — star-shaped, a conflict-free batch emits nothing.
+            from pyspark.sql import Window
+
             pcm_b = (
                 b.filter("decode_ok")
                 .filter(F.col("pcm_sha") != "")
@@ -609,7 +593,7 @@ def incremental_near_dedup(
             tconf_rep = pcm_b.withColumn(
                 "rep",
                 F.min(F.struct("clip_id", "t_norm")).over(
-                    _W.partitionBy("pcm_sha")
+                    Window.partitionBy("pcm_sha")
                 ),
             )
             tconf = tconf_rep.filter(
@@ -618,43 +602,6 @@ def incremental_near_dedup(
                 "clip_id",
                 F.col("rep.clip_id").alias("matched_clip_id"),
                 "pcm_sha",
-            )
-            near_intra = (
-                hamming_matches(
-                    posting_b, posting_b.select("key", "clip_id", "simhash")
-                )
-                .filter(F.col("clip_id") > F.col("matched_clip_id"))
-                .withColumn("match_scope", F.lit("batch"))
-            )
-            mh_cand_intra = (
-                posting_mh_b.alias("p")
-                .join(posting_mh_b.alias("i"), "key")
-                .filter(F.col("p.clip_id") > F.col("i.clip_id"))
-                .select(
-                    F.col("p.clip_id").alias("clip_id"),
-                    F.col("i.clip_id").alias("matched_clip_id"),
-                )
-                .distinct()
-            )
-            mh_intra = verify_mh(mh_cand_intra, text_b, b).withColumn(
-                "match_scope", F.lit("batch")
-            )
-            # within-batch containment IS the batch operator on the
-            # micro-batch (same caps, min-df pruning, verify split)
-            cont_intra = containment_edges(b, cfg).select(
-                F.col("a").alias("clip_id"),
-                F.col("b").alias("matched_clip_id"),
-                F.lit("containment").alias("match_kind"),
-                "sim",
-                F.lit("batch").alias("match_scope"),
-            )
-            matches = (
-                exact_intra.unionByName(ttext_intra)
-                .unionByName(pcm_intra)
-                .unionByName(trim_intra)
-                .unionByName(near_intra)
-                .unionByName(mh_intra)
-                .unionByName(cont_intra)
             )
             frames_b = None
             if audio_containment:
@@ -669,7 +616,7 @@ def incremental_near_dedup(
                 frames_b = frames_from_signatures(
                     b.select("clip_id", "decode_ok", "frame_fps")
                 ).persist()
-                hots.append(frames_b)  # unpersisted with the hot sets
+                cached.append(frames_b)
                 ac_intra = audio_containment_edges(frames_b, cfg=cfg).select(
                     F.col("a").alias("clip_id"),
                     F.col("b").alias("matched_clip_id"),
@@ -719,7 +666,7 @@ def incremental_near_dedup(
                 # stores written before the column existed.
                 if "pcm_sha" in corpus.columns:
                     pcm_cross = (
-                        areps_b.alias("p")
+                        areps.join(b.select("clip_id", "sha256"), "clip_id")
                         .join(
                             corpus.filter(F.col("pcm_sha") != "")
                             .select(
@@ -763,7 +710,7 @@ def incremental_near_dedup(
                 # nothing.
                 if "trim_sha" in corpus.columns:
                     trim_cross = (
-                        trim_reps_b.join(
+                        trim_reps(areps).join(
                             corpus.filter(F.col("trim_sha") != "").select(
                                 F.col("clip_id").alias("matched_clip_id"),
                                 F.col("pcm_sha").alias("i_pcm"),
@@ -829,36 +776,17 @@ def incremental_near_dedup(
                     # pattern's rarest SURVIVING store fingerprint
                     # (min-df against the accumulated index, the batch
                     # operator's pruning; hot keys excluded + counted)
-                    fp_counts = fp_index.groupBy("key").agg(
+                    live_fp = capped(fp_index, "fp_posting")
+                    fp_counts = live_fp.groupBy("key").agg(
                         F.count("*").alias("n")
                     )
-                    fp_hot = fp_counts.filter(
-                        F.col("n") > cfg.band_cap
-                    ).persist()
-                    hots.append(fp_hot)
-                    store_write(
-                        fp_hot, f"{store_dir}/fp_posting_dropped", batch_id
-                    )
-                    patmin = (
-                        posting_fp_b.join(
-                            fp_counts.join(
-                                fp_hot.select("key"), "key", "left_anti"
-                            ),
-                            "key",
-                        )
-                        .groupBy("clip_id")
-                        .agg(F.min(F.struct("n", "key")).alias("mk"))
-                        .select(
-                            F.col("clip_id").alias("pat_id"),
-                            F.col("mk.key").alias("key"),
-                        )
-                    )
+                    patmin = rarest_fingerprint(
+                        posting_fp_b.join(fp_counts, "key")
+                    ).withColumnRenamed("clip_id", "pat_id")
                     oriented_a = (
                         patmin.join(pat_b, "pat_id")
                         .join(
-                            fp_index.join(
-                                fp_hot.select("key"), "key", "left_anti"
-                            ).select(
+                            live_fp.select(
                                 "key", F.col("clip_id").alias("cont_id")
                             ),
                             "key",
@@ -923,7 +851,7 @@ def incremental_near_dedup(
                         (F.col("dfc") > cfg.ac_max_df)
                         | (F.col("n_post") > cfg.ac_post_cap)
                     ).persist()
-                    hots.append(ac_hot)
+                    cached.append(ac_hot)
                     store_write(
                         ac_hot.select(
                             F.col("fhash").alias("key"),
@@ -997,6 +925,9 @@ def incremental_near_dedup(
                         )
                     )
                     matches = matches.unionByName(ac_cross)
+            # evaluated once for store_write's emptiness check and write
+            matches = matches.persist()
+            cached.append(matches)
             store_write(matches, out_dir, batch_id)
             # ingest-time audio quality gates (same thresholds + flag
             # semantics as the batch --quality-report path; only
@@ -1031,18 +962,14 @@ def incremental_near_dedup(
             # pattern-eligible clip — the slim probe side of the
             # store-pattern-in-future-container direction
             bc = posting_fp_b.groupBy("key").agg(F.count("*").alias("n"))
-            patmin_b = (
+            patmin_b = rarest_fingerprint(
                 posting_fp_b.join(
                     text_b.filter(
                         F.col("t_len") >= cfg.min_containment_len
                     ).select("clip_id"),
                     "clip_id",
-                )
-                .join(bc, "key")
-                .groupBy("clip_id")
-                .agg(F.min(F.struct("n", "key")).alias("mk"))
-                .select(F.col("mk.key").alias("key"), "clip_id")
-            )
+                ).join(bc, "key")
+            ).select("key", "clip_id")
             store_write(patmin_b, f"{store_dir}/fp_pat", batch_id)
             if audio_containment:
                 store_write(
@@ -1059,7 +986,7 @@ def incremental_near_dedup(
                 for sub in subs:
                     compact_store(spark_l, f"{store_dir}/{sub}", int(batch_id) - 1)
         finally:
-            for h in hots:
+            for h in cached:
                 h.unpersist()
             b.unpersist()
 

@@ -1212,3 +1212,78 @@ def test_streaming_bloom_bits_match_batch_exactly(spark, tmp_path):
         ).dropDuplicates(["id"])
         hits = bloom_probe(folded, probe, "id").collect()
         assert hits and all(r["bloom_hit"] == 1 for r in hits), tag
+
+
+def _single_drop(spark, pdf, root, cfg):
+    """Land `pdf` as one parquet file (one micro-batch) and drain it
+    through incremental_near_dedup; returns (matches, store_dir)."""
+    from file_dedup_rust_spark.streaming.incremental import (
+        incremental_near_dedup,
+        read_store,
+    )
+
+    landing = str(root / "landing")
+    spark.createDataFrame(pdf, schema=datagen.CLIP_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(landing)
+    store = str(root / "store")
+    q = incremental_near_dedup(
+        spark, landing, store, str(root / "out"), str(root / "ck"), cfg
+    )
+    assert q.awaitTermination(180)
+    return read_store(spark, str(root / "out")), store
+
+
+def test_streaming_batch_scope_rows_are_build_edges(spark, cfg, tmp_path):
+    """Within one micro-batch the stream emits exactly the batch
+    engine's edges: the (kind, {clip_id, matched_clip_id}) pairs of a
+    single drop equal build_edges' (kind, {a, b}) pairs over the same
+    clips — representative contraction and star shapes included, so
+    exact copies attach to their rep rather than to every near-dup
+    neighbour — and every row names the larger id as clip_id."""
+    from file_dedup_rust_spark.functions.udfs import compute_signatures
+    from file_dedup_rust_spark.plans.pipeline import build_edges
+
+    pdf = datagen.generate_clips_pandas(120, seed=49)
+    out, _ = _single_drop(spark, pdf, tmp_path, cfg)
+    rows = out.collect()
+    assert {r.match_scope for r in rows} == {"batch"}
+    got = {(r.match_kind, frozenset((r.clip_id, r.matched_clip_id))) for r in rows}
+    edges = build_edges(
+        compute_signatures(spark.createDataFrame(pdf, schema=datagen.CLIP_SCHEMA), cfg),
+        cfg,
+    ).collect()
+    want = {(e.kind, frozenset((e.a, e.b))) for e in edges}
+    assert got == want
+    assert len(rows) == len(edges)
+    # the drop exercises the exact, transcript and audio tiers
+    assert {"exact", "transcript", "audio"} <= {k for k, _ in got}
+    assert all(r.clip_id > r.matched_clip_id for r in rows)
+
+
+def test_streaming_batch_dropped_records_capped_buckets(spark, cfg, tmp_path):
+    """Buckets the within-batch edge derivation drops at band_cap are
+    recorded in {store_dir}/batch_dropped, not silently truncated: more
+    than band_cap distinct transcripts sharing one long passage share
+    its winnowing fingerprints, so those buckets exceed the cap."""
+    import dataclasses
+
+    from file_dedup_rust_spark.streaming.incremental import read_store
+
+    small = dataclasses.replace(cfg, band_cap=3)
+    pdf = datagen.generate_clips_pandas(12, seed=50)
+    shared = (
+        "the quarterly maintenance window begins at midnight and every "
+        "service in the eastern region restarts in sequence"
+    )
+    pdf = pdf.assign(
+        transcript=[f"{shared} followed by note number {i} of the log"
+                    for i in range(len(pdf))]
+    )
+    _, store = _single_drop(spark, pdf, tmp_path, small)
+    dropped = read_store(spark, f"{store}/batch_dropped")
+    assert dropped is not None
+    assert set(dropped.columns) == {"key", "n", "path"}
+    winnow = dropped.filter("path = 'winnow'").collect()
+    assert winnow
+    assert all(r.n > small.band_cap for r in winnow)
